@@ -6,7 +6,7 @@ SURVEY.md §2.B, i.e. ``oracle_sql()``'s keys) at ``$SPARK_GRAFT_SF_DIR``
 prints ONE JSON line:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"q": sec, ...}, "sf": 0.1}
+     "queries": {"q": sec, ...}, "sf": 0.1, "cpus": <task threads>}
 
 Timing methodology (BASELINE.md protocol): per query, one warm-up run
 then median of ``$SPARK_GRAFT_BENCH_REPS`` (default 3) timed runs.
@@ -42,6 +42,9 @@ def main() -> None:
 
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # task threads of this run: the per-key regression gate only
+    # compares runs made on the same core count
+    cpus = spark.sparkContext.defaultParallelism
     qs, oracles = E.queries(), E.oracle_sql()
     headline = [k for k in qs if k in oracles]
 
@@ -144,6 +147,16 @@ def main() -> None:
         if prev_path is None:
             raise FileNotFoundError("bench_prior.json missing")
         prev = json.loads(prev_path.read_text())
+        if prev.get("cpus") != cpus:
+            # a ratio between runs on different core counts is not a
+            # regression signal; never compare them silently
+            print(
+                "bench: WARNING tools/bench_prior.json is from another "
+                "core count — regression gate SKIPPED "
+                f"(cpus {prev.get('cpus', 'missing')} vs {cpus})",
+                file=sys.stderr,
+            )
+            prev = {}
         prev_q = prev.get("queries", {})
         prev_sentinel = float(prev.get("sentinel_sec") or 0)
         load = (sentinel / prev_sentinel) if prev_sentinel > 0 else 1.0
@@ -179,6 +192,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings3,
         "sf": sf_from_dir(SF_DIR),
+        "cpus": cpus,
         "n_queries": len(timings),
         "reps": REPS,
         "sentinel_sec": sentinel,

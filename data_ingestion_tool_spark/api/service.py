@@ -42,7 +42,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from ..catalog import MAX_LIST_TABLES, schema_to_columns
+from ..catalog import TableNotFoundError, describe_table, list_tables
 from ..sources.csv_io import export_csv_rows, read_csv_compat
 from .connector import route
 from .models import ColumnSelection, ConnectionInfo, build_export_dataframe
@@ -69,10 +69,7 @@ def connect(spark: SparkSession, conn: ConnectionInfo) -> dict[str, Any]:
     ``conn`` names; otherwise from the session catalog."""
     try:
         be = route(conn)
-        if be is not None:
-            names = be.list_tables()
-        else:
-            names = [t.name for t in spark.catalog.listTables()][:MAX_LIST_TABLES]
+        names = be.list_tables() if be is not None else list_tables(spark)
     except Exception as e:  # noqa: BLE001 — mirror blanket 400 (main.py:112-118)
         raise ApiError(400, f"Connection failed: {e}") from e
     return {
@@ -87,24 +84,16 @@ def get_columns(spark: SparkSession, conn: ConnectionInfo, table: str) -> dict[s
     """EXISTS guard + DESCRIBE (main.py:128-153): 404 when absent, else
     per-column name/type/default/comment — from the routed server when
     external routing is enabled, else from the session catalog."""
-    be = None
     try:
         be = route(conn)
-        exists = (
-            be.table_exists(table)
-            if be is not None
-            else spark.catalog.tableExists(table)
-        )
-    except Exception as e:  # noqa: BLE001
-        raise ApiError(400, f"Failed to get columns: {e}") from e
-    if not exists:
-        raise ApiError(404, f"Table {table} does not exist")
-    try:
-        cols = (
-            be.columns(table)
-            if be is not None
-            else schema_to_columns(spark.table(table).schema)
-        )
+        if be is None:
+            cols = describe_table(spark, table)
+        elif be.table_exists(table):
+            cols = be.columns(table)
+        else:
+            raise TableNotFoundError(table)
+    except TableNotFoundError:
+        raise ApiError(404, f"Table {table} does not exist") from None
     except Exception as e:  # noqa: BLE001
         raise ApiError(400, f"Failed to get columns: {e}") from e
     return {"status": "success", "columns": cols, "count": len(cols)}

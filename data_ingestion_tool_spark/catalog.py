@@ -11,6 +11,9 @@ footer schema — still metadata-only, no data scan.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -28,6 +31,20 @@ def list_tables(spark: SparkSession, db: str | None = None) -> list[str]:
 
 def table_exists(spark: SparkSession, name: str) -> bool:
     return spark.catalog.tableExists(name)
+
+
+def clear_orphaned_location(spark: SparkSession, name: str) -> None:
+    """Remove ``<warehouse>/<name>`` when the catalog has no table
+    ``name``. The in-memory catalog dies with its session but the
+    warehouse directory survives it, so a reused warehouse left by an
+    earlier process makes ``saveAsTable`` raise LOCATION_ALREADY_EXISTS
+    (``DROP TABLE IF EXISTS`` cannot remove a location the catalog does
+    not know). With a real metastore the table would still be listed and
+    this is a no-op."""
+    if table_exists(spark, name):
+        return
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    shutil.rmtree(os.path.join(wh, name.lower()), ignore_errors=True)
 
 
 def describe_table(spark: SparkSession, name: str) -> list[dict[str, str]]:

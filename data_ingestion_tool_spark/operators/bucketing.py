@@ -16,11 +16,10 @@ upgrade path.
 from __future__ import annotations
 
 import re
-import shutil
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import clear_orphaned_location, table_exists
 from ..sources.parquet_io import read_table
 
 
@@ -52,14 +51,7 @@ def ensure_bucketed(
     existing layout)."""
     tag = re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
     name = f"{table}_bkt{buckets}_{tag}"
-    if not spark.catalog.tableExists(name):
-        # the in-memory catalog dies with the session but the warehouse
-        # dir survives — clear an orphaned location or saveAsTable
-        # raises LOCATION_ALREADY_EXISTS (with a real metastore the
-        # tableExists check alone is the idempotence)
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        leftover = Path(wh) / name
-        if leftover.exists():
-            shutil.rmtree(leftover, ignore_errors=True)
+    if not table_exists(spark, name):
+        clear_orphaned_location(spark, name)
         write_bucketed(read_table(spark, sf_dir, table), name, key, buckets)
     return spark.table(name)

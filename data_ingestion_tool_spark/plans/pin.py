@@ -65,8 +65,13 @@ def unpin(df: DataFrame) -> None:
     per round for the life of the loop (round-13 ADVICE). A pinned
     frame's plan is a ``LogicalRDD`` over the persisted/checkpointed
     internal RDD; unpersisting that RDD frees the blocks immediately
-    instead of waiting for the JVM-side reference to be GC'd. Failures
-    are swallowed — this is hygiene, never correctness."""
+    instead of waiting for the JVM-side reference to be GC'd.
+
+    Precondition: call it only after every consumer of ``df`` has
+    materialized (e.g. the next round's frame was pinned eagerly). A
+    pinned frame has no lineage to recompute from, so unpinning one that
+    a pending action still reads fails that action instead of
+    recomputing it. Errors of the unpersist call itself are swallowed."""
     try:
         df._jdf.queryExecution().logical().rdd().unpersist(False)
     except Exception:  # noqa: BLE001 - private accessor; best-effort only

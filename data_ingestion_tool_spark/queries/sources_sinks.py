@@ -17,7 +17,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import columns_df
+from ..catalog import clear_orphaned_location, columns_df
 from ..plans.pin import pin
 from ..sources import (
     ingest_append,
@@ -2572,6 +2572,7 @@ def catalog_analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = read_table(spark, sf_dir, "orders")
     spark.sql("DROP TABLE IF EXISTS orders_stats_tbl")
+    clear_orphaned_location(spark, "orders_stats_tbl")
     o.write.mode("overwrite").saveAsTable("orders_stats_tbl")
     spark.sql("ANALYZE TABLE orders_stats_tbl COMPUTE STATISTICS")
     spark.sql(

@@ -4,13 +4,47 @@ The reference stores tables in ClickHouse MergeTree with no sort key
 (`backend/main.py:266-267`, ``ORDER BY tuple()``); our equivalent is
 plain Parquet directories/files. Reads stay fully declarative so
 Catalyst keeps column pruning + predicate pushdown into the scan.
+
+:func:`read_table` is the engine's single table resolver. A plain
+``spark.read.parquet`` infers the schema from the footer on every call,
+and that inference is a Spark job run while the query is being built.
+The resolver infers each table's schema once per file version and then
+reads with ``spark.read.schema(cached).parquet(path)``, which launches
+no job and yields the same schema and optimized plan. This is the
+metastore's job in a real deployment (ClickHouse answers ``DESCRIBE``
+from its own catalog, `backend/main.py:134-147`). The cache holds
+``StructType`` metadata only, never data, in a bounded LRU of
+:data:`SCHEMA_CACHE_SIZE` entries. An entry is keyed on:
+
+- the resolved (symlink-free) path;
+- the file's ``(st_mtime_ns, st_size)``, or for a directory table the
+  sorted ``(relative name, size, mtime_ns)`` of every file under it, so
+  a rewrite, an added part file or a removed one is a new version;
+- the value of every SQL conf that schema inference reads
+  (:data:`SCHEMA_CONFS`), so flipping one re-infers.
+
+The cache is process-wide: a schema depends on the file version and the
+conf values in its key, not on the session that read it.
+
+Reads that bypass the cache, and why:
+
+- tables the engine writes itself (ingest/warehouse/txnlog data,
+  compaction outputs, the stream scratch in ``queries/streaming.py``,
+  ``queries/sources_sinks.py`` and ``queries/temporal.py``) keep plain
+  ``spark.read.parquet``: their files change with every write and are
+  read back right after it, so an entry would seldom be hit;
+- URIs (``hdfs://``, ``s3a://`` ...) cannot be versioned with
+  ``os.stat`` and are read plainly; a metastore owns that job there.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TPCH_TABLES = (
     "region",
@@ -26,9 +60,66 @@ TPCH_TABLES = (
 )
 
 
+# Tables a process resolves: the ten registry tables per scale factor,
+# times the few schema-conf combinations in use, fit many times over.
+SCHEMA_CACHE_SIZE = 256
+
+# SQL confs that change what parquet schema inference returns.
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+
+_schemas: OrderedDict[tuple, T.StructType] = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def _file_version(path: str) -> tuple | None:
+    """What changes when the table at ``path`` is rewritten, or None when
+    it cannot be stat'ed locally."""
+    if "://" in path:
+        return None
+    local = os.path.realpath(path)
+    try:
+        if not os.path.isdir(local):
+            st = os.stat(local)
+            return (local, st.st_mtime_ns, st.st_size)
+        leaves = []
+        for root, _dirs, files in os.walk(local):
+            for f in files:
+                fp = os.path.join(root, f)
+                st = os.stat(fp)
+                leaves.append((os.path.relpath(fp, local), st.st_size, st.st_mtime_ns))
+    except OSError:  # missing, or a file vanished mid-walk (write in progress)
+        return None
+    return (local, tuple(sorted(leaves)))
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one named table from a scale-factor directory."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Scan one named table from a scale-factor directory, with its
+    footer schema inferred once per file version and schema-conf state
+    (see module doc)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    version = _file_version(path)
+    if version is None:
+        return spark.read.parquet(path)
+    key = (version, tuple(spark.conf.get(c, None) for c in SCHEMA_CONFS))
+    with _schemas_lock:
+        schema = _schemas.get(key)
+        if schema is not None:
+            _schemas.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schemas_lock:
+        _schemas[key] = df.schema
+        while len(_schemas) > SCHEMA_CACHE_SIZE:
+            _schemas.popitem(last=False)
+    return df
 
 
 def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

@@ -34,3 +34,22 @@ def test_ckpt_ttl_spares_live_tree_and_prunes_dead(tmp_path, monkeypatch):
 
     assert not dead.exists(), "stale checkpoint tree should be pruned"
     assert live.exists(), "live checkpoint tree must survive TTL pruning"
+
+
+def test_analyze_stats_survives_orphaned_warehouse_location(spark, sf_dir):
+    """A reused warehouse that outlived its process still holds the
+    managed table's directory, which the new in-memory catalog does not
+    know: DROP TABLE IF EXISTS leaves it, and saveAsTable used to raise
+    LOCATION_ALREADY_EXISTS on it."""
+    from data_ingestion_tool_spark.queries import QUERIES
+
+    spark.sql("DROP TABLE IF EXISTS orders_stats_tbl")
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    orphan = os.path.join(wh, "orders_stats_tbl")
+    os.makedirs(orphan, exist_ok=True)
+    with open(os.path.join(orphan, "part-00000-stale.parquet"), "wb") as f:
+        f.write(b"left by a crashed process")
+
+    (row,) = QUERIES["catalog_analyze_table_stats"](spark, sf_dir).collect()
+    assert row.stats_match == 1
+    assert row.stats_row_count == row.exact_row_count > 0

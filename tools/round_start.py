@@ -7,11 +7,12 @@ against, so mid-round activity can't drift them:
    prior round's close. ``__spark_entry__._window_priority`` sorts
    never-driver-checked PRIOR keys ahead of this round's additions, so
    each 50-entry CORRECTNESS window attests long-standing keys first.
-2. ``tools/bench_prior.json`` — the prior round's committed BENCH.json.
-   ``bench.py``'s sentinel-normalized regression gate compares against
-   this FROZEN file; comparing against the live BENCH.json would let a
-   second bench run in the same round hide a real regression
-   (round-5 ADVICE).
+2. ``tools/bench_prior.json`` — the prior round's committed BENCH.json,
+   core count (``cpus``) included. ``bench.py``'s sentinel-normalized
+   regression gate compares against this FROZEN file; comparing against
+   the live BENCH.json would let a second bench run in the same round
+   hide a real regression. The gate is skipped, with a warning, when
+   the prior's ``cpus`` is missing or differs from the run's.
 
 Usage: python tools/round_start.py   (idempotent within a round only if
 you haven't registered new queries or run bench yet — run it FIRST.)
@@ -41,8 +42,10 @@ def main() -> None:
     bench = os.path.join(REPO, "BENCH.json")
     if os.path.exists(bench):
         shutil.copy(bench, os.path.join(HERE, "bench_prior.json"))
-        n = len(json.load(open(bench)).get("queries", {}))
-        print(f"bench_prior.json: frozen ({n} query timings)")
+        prior = json.load(open(bench))
+        n = len(prior.get("queries", {}))
+        cpus = prior.get("cpus", "MISSING, bench.py will skip its gate")
+        print(f"bench_prior.json: frozen ({n} query timings, cpus {cpus})")
     else:
         print("bench_prior.json: no BENCH.json to freeze (first round?)")
 
